@@ -118,7 +118,7 @@ def incremental_validate_pruned(
     signature pass reads two narrow columns, and the expensive content
     read + kernel touch only churned partitions."""
     from jsl_engine.manifest import (
-        committed_partitions,
+        committed_keys,
         partition_signatures,
         unchanged_partitions,
     )
@@ -134,10 +134,7 @@ def incremental_validate_pruned(
     skip = unchanged_partitions(spark, manifest_path, fingerprint, sigs)
     all_parts = {r[part_col] for r in sigs.select(part_col).collect()}
     changed = sorted(all_parts - skip)
-    done = {
-        r.part_key
-        for r in committed_partitions(spark, manifest_path, fingerprint).collect()
-    }
+    done = committed_keys(spark, manifest_path, fingerprint)
     removed = sorted(done - all_parts)
     pruned = spark.read.parquet(new_root).where(F.col(part_col).isin(changed))
     fresh = validate_df(pruned, schema, key_cols=(part_col, *keys))

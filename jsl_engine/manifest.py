@@ -26,10 +26,13 @@ from __future__ import annotations
 
 import time
 import uuid
+from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -208,6 +211,16 @@ def unchanged_partitions(
     return {r.part_key for r in match.select("part_key").collect()}
 
 
+def local_frame(spark: SparkSession, rows: "list[dict]", schema: StructType) -> DataFrame:
+    """A driver-local frame of ``rows``: handed over as an Arrow table it
+    plans as a ``LocalTableScan``, where a Python list is pickled into a
+    parallelized RDD whose tasks and shuffles cost more than the few rows
+    they carry. A NULL in a non-nullable column raises ``ValueError``
+    (the Arrow cast to ``schema``) before anything is written."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     """The manifest table, or an empty frame if no run has committed yet.
 
@@ -217,8 +230,8 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return local_frame(spark, [], MANIFEST_SCHEMA)
         raise
 
 
@@ -238,6 +251,35 @@ def committed_partitions(
         .select("part_key")
         .distinct()
     )
+
+
+def committed_keys(spark: SparkSession, manifest_path: str, fingerprint: str) -> "set[str]":
+    """:func:`committed_partitions` collected to the driver — the resume
+    probe. A root no run has committed to answers from one existence
+    check on the Hadoop FileSystem of the path's own scheme, with no Spark
+    job; an existing manifest is read (so a corrupt one raises, as in
+    :func:`read_manifest`)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(hpath):
+        return set()
+    return {
+        r.part_key
+        for r in committed_partitions(spark, manifest_path, fingerprint).collect()
+    }
+
+
+@contextmanager
+def _described(spark: SparkSession, phase: str):
+    """Spark job description ``jsl:validate:<phase>`` for the jobs the
+    block starts on this thread; the caller's description is restored."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"jsl:validate:{phase}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prior)
 
 
 def run_validation_job(
@@ -330,28 +372,28 @@ def run_validation_job(
     # so the pending set is collected to the driver and applied as an isin
     # filter: partition-prunable by Catalyst, and — unlike a broadcast join
     # on a derived distinct — never recomputed per downstream action.
-    done_keys = {
-        r.part_key
-        for r in committed_partitions(spark, manifest_path, fingerprint).collect()
-    }
-    n_done = len(done_keys)
-    if not done_keys:
-        # first run: nothing committed, so every partition is pending — skip
-        # the distinct scan over the source entirely (the per-partition
-        # breakdown falls out of the metrics aggregation below)
-        pending_keys: list[str] | None = None
-        todo = keyed
-    else:
-        all_keys = {r.part_key for r in keyed.select("part_key").distinct().collect()}
-        pending_keys = sorted(all_keys - done_keys)
-        if not pending_keys:
-            return {
-                "job_id": job_id,
-                "partitions_pending": 0,
-                "partitions_committed": n_done,
-                "docs": 0,
+    with _described(spark, "probe"):
+        done_keys = committed_keys(spark, manifest_path, fingerprint)
+        n_done = len(done_keys)
+        if not done_keys:
+            # first run: nothing committed, so every partition is pending —
+            # skip the distinct scan over the source entirely (the
+            # per-partition breakdown falls out of the metrics aggregation)
+            pending_keys: list[str] | None = None
+            todo = keyed
+        else:
+            all_keys = {
+                r.part_key for r in keyed.select("part_key").distinct().collect()
             }
-        todo = keyed.where(F.col("part_key").isin(pending_keys))
+            pending_keys = sorted(all_keys - done_keys)
+            if not pending_keys:
+                return {
+                    "job_id": job_id,
+                    "partitions_pending": 0,
+                    "partitions_committed": n_done,
+                    "docs": 0,
+                }
+            todo = keyed.where(F.col("part_key").isin(pending_keys))
     if repartition:
         # balanced exchange before the Python stage: salt on full key so a
         # monorepo prefix cannot pin a straggler task
@@ -411,17 +453,20 @@ def run_validation_job(
     # cache: at 10^12-file scale the result does not fit in memory, and in
     # local mode a multi-GB cache next to 32 task threads is a GC storm.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    validated.write.mode("overwrite").partitionBy("part_key").parquet(
-        f"{output_root}/validated"
-    )
-
-    try:
-        done_data = spark.read.parquet(f"{output_root}/validated")
-    except AnalysisException:
-        # an empty source's write leaves only _SUCCESS (no footers to
-        # infer a schema from): a scheduled job over a not-yet-populated
-        # table must no-op cleanly, not crash after the write
-        done_data = spark.createDataFrame([], validated.schema)
+    with _described(spark, "write"):
+        validated.write.mode("overwrite").partitionBy("part_key").parquet(
+            f"{output_root}/validated"
+        )
+        try:
+            done_data = spark.read.parquet(f"{output_root}/validated")
+        except AnalysisException as e:
+            # an empty source's write leaves only _SUCCESS (no footers to
+            # infer a schema from): a scheduled job over a not-yet-populated
+            # table must no-op cleanly, not crash after the write. Any other
+            # failure to read the sink surfaces.
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            done_data = local_frame(spark, [], validated.schema)
     if pending_keys is not None:
         done_data = done_data.where(F.col("part_key").isin(pending_keys))
 
@@ -531,19 +576,22 @@ def run_validation_job(
             )
             metric_rows.extend(detail.collect())
 
-    import threading
+    from pyspark import InheritableThread
 
     failures: list[BaseException] = []
 
-    def guarded(fn) -> None:
+    def guarded(phase: str, fn) -> None:
         try:
-            fn()
+            with _described(spark, phase):
+                fn()
         except BaseException as exc:  # propagate to the caller, never swallow
             failures.append(exc)
 
+    # InheritableThread: the derive actions keep the caller's job group and
+    # other local properties, which a plain thread's JVM side would lose
     threads = [
-        threading.Thread(target=guarded, args=(write_violations,)),
-        threading.Thread(target=guarded, args=(compute_metrics,)),
+        InheritableThread(guarded, args=("violations", write_violations)),
+        InheritableThread(guarded, args=("metrics", compute_metrics)),
     ]
     for t in threads:
         t.start()
@@ -552,9 +600,10 @@ def run_validation_job(
     if failures:
         raise failures[0]
     # commit LAST: every derived output above succeeded
-    spark.createDataFrame(metric_rows, MANIFEST_SCHEMA).write.mode(
-        "append"
-    ).parquet(manifest_path)
+    with _described(spark, "commit"):
+        local_frame(
+            spark, [r.asDict() for r in metric_rows], MANIFEST_SCHEMA
+        ).write.mode("append").parquet(manifest_path)
 
     summary_rows = [r for r in metric_rows if r.schema_key is None]
     return {

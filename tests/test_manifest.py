@@ -2,12 +2,23 @@
 no-op; a partial manifest resumes only pending partitions; a schema change
 invalidates prior commits; outputs are idempotent."""
 
+import glob
+import uuid
+from contextlib import contextmanager
+
+import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from jsl_engine.corpus import CODE_FILE_SCHEMA, generate_corpus
 from jsl_engine.manifest import (
+    MANIFEST_SCHEMA,
+    committed_keys,
     committed_partitions,
+    content_sig_expr,
+    local_frame,
     read_manifest,
     run_validation_job,
 )
@@ -460,10 +471,147 @@ def test_null_first_key_lands_in_sentinel_partition(spark, tmp_path):
 
 def test_empty_source_first_run_is_clean_noop(spark, tmp_path):
     """A scheduled job over a not-yet-populated table returns docs=0
-    instead of crashing on the schemaless empty sink."""
+    instead of crashing on the schemaless empty sink; its empty commit
+    leaves a readable manifest, and a re-run stays a no-op."""
     src = generate_corpus(spark, 100, seed=5, defect_rate=0.0,
                           partitions=2).where(F.lit(False))
     schema = compile_schema(CODE_FILE_SCHEMA)
-    r = run_validation_job(spark, src, schema,
-                           output_root=str(tmp_path / "empty"))
+    root = str(tmp_path / "empty")
+    r = run_validation_job(spark, src, schema, output_root=root)
     assert r["docs"] == 0
+    # the empty commit still leaves a readable, 0-row manifest
+    assert spark.read.parquet(f"{root}/manifest").count() == 0
+    r2 = run_validation_job(spark, src, schema, output_root=root)
+    assert r2["docs"] == 0 and r2["partitions_pending"] == 0
+
+
+@contextmanager
+def _job_group(spark):
+    """Run the block's Spark jobs under a fresh job group; yields its id."""
+    group = f"test-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield group
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+
+
+def _group_job_ids(spark, group: str) -> list:
+    """Job ids of a job group, read once the listener bus (which feeds the
+    status store asynchronously) has processed every event posted so far."""
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_resume_probe_runs_no_spark_job_on_uncommitted_root(
+    spark, tmp_path, monkeypatch
+):
+    """The resume probe on a root no run has committed to answers from a
+    FileSystem existence check: no manifest read, no Spark job. The same
+    probe on an existing manifest does run one (the control that the
+    group tracking sees jobs at all)."""
+    import jsl_engine.manifest as M
+
+    committed = str(tmp_path / "committed" / "manifest")
+    local_frame(spark, [], MANIFEST_SCHEMA).write.parquet(committed)
+
+    def no_read(*a, **k):
+        raise AssertionError("manifest read on a never-committed root")
+
+    with monkeypatch.context() as mp, _job_group(spark) as missing:
+        mp.setattr(M, "read_manifest", no_read)
+        assert committed_keys(spark, str(tmp_path / "never" / "manifest"), "fp") == set()
+    with _job_group(spark) as control:
+        assert committed_keys(spark, committed, "fp") == set()
+    assert _group_job_ids(spark, control)
+    assert _group_job_ids(spark, missing) == []
+
+
+def test_manifest_round_trip_matches_sink(spark, corpus, tmp_path, monkeypatch):
+    """The commit is a driver-local (LocalTableScan) frame; the manifest
+    files keep MANIFEST_SCHEMA, nullability included; every per-partition
+    row equals the job summary and a recount of the validated sink,
+    content_sig and HLL sketch included."""
+    import jsl_engine.manifest as M
+
+    frames = []
+
+    def spy(*args):
+        frames.append(local_frame(*args))
+        return frames[-1]
+
+    monkeypatch.setattr(M, "local_frame", spy)
+    root = str(tmp_path / "rt")
+    schema = compile_schema(CODE_FILE_SCHEMA)
+    with _job_group(spark) as group:
+        r = run_validation_job(spark, corpus, schema, output_root=root)
+
+    # every job of the run, the two derive threads' included, stays in the
+    # caller's job group under its phase description; a never-committed
+    # root has no probe job
+    store = spark._jsc.sc().statusStore()
+    described = {
+        store.job(j).description().get() for j in _group_job_ids(spark, group)
+    }
+    assert described == {f"jsl:validate:{p}"
+                         for p in ("write", "violations", "metrics", "commit")}
+
+    commit = frames[-1]
+    assert commit.schema == MANIFEST_SCHEMA
+    plan = commit._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+
+    files = glob.glob(f"{root}/manifest/*.parquet")
+    assert files
+    for f in files:
+        assert from_arrow_schema(pq.read_schema(f)) == MANIFEST_SCHEMA, f
+
+    m = read_manifest(spark, f"{root}/manifest")
+    rows = m.collect()
+    assert len(rows) == r["partitions_pending"]
+    assert {x.job_id for x in rows} == {r["job_id"]}
+    assert {x.schema_fingerprint for x in rows} == {r["fingerprint"]}
+    assert sum(x.n_docs for x in rows) == r["docs"] == 1200
+    assert sum(x.n_ok for x in rows) == r["docs_ok"]
+
+    est = F.expr("hll_sketch_estimate(content_hll)")
+    cols = ["part_key", "n_docs", "n_ok", "n_bad", "n_violations", "content_sig", "hll"]
+    got = sorted(map(tuple, m.withColumn("hll", est).select(*cols).collect()))
+    want = sorted(map(tuple, (
+        spark.read.parquet(f"{root}/validated")
+        .groupBy("part_key")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.col("ok").cast("long")).alias("n_ok"),
+            F.sum((~F.col("ok")).cast("long")).alias("n_bad"),
+            F.sum("n_errors").cast("long").alias("n_violations"),
+            content_sig_expr(("repo", "path", "commit")).alias("content_sig"),
+            F.hll_sketch_agg("content_sha256", F.lit(12)).alias("content_hll"),
+        )
+        .withColumn("hll", est)
+        .select(*cols)
+        .collect()
+    )))
+    assert got == want
+
+
+def test_corrupt_manifest_raises_instead_of_revalidating(spark, corpus, tmp_path):
+    """A garbage file in the commit log must surface, not read as "nothing
+    committed" and re-validate the corpus on top of the bad log."""
+    root = tmp_path / "corrupt"
+    (root / "manifest").mkdir(parents=True)
+    (root / "manifest" / "part-00000-garbage.parquet").write_bytes(b"not parquet " * 64)
+    schema = compile_schema(CODE_FILE_SCHEMA)
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        run_validation_job(spark, corpus, schema, output_root=str(root))
+    assert not (root / "validated").exists()
+
+
+def test_local_frame_rejects_null_in_non_nullable_column(spark):
+    """A NULL part_key fails at the frame, before a commit can write it."""
+    row = dict.fromkeys(MANIFEST_SCHEMA.fieldNames())
+    with pytest.raises(ValueError, match="part_key"):
+        local_frame(spark, [row], MANIFEST_SCHEMA)
